@@ -1,28 +1,40 @@
 """Distributed matrix profile over per-conversation series.
 
-Two physical strategies (chosen by series length, SURVEY.md §7.4):
+Every single-dimension operator reads its input through
+``assemble_series``: one JVM-side aggregation collapses the long-format
+(conv_id, metric, bucket_s, value) rows to one sorted array row per
+series, and a ``mapInPandas`` kernel runs the NumPy algorithm on each
+row (``matrix_profile``, ``discover``, pan-MP, MPDist, the update check,
+the whole-series AB join; ``k_matrix_profile`` pivots its dimensions
+per conversation instead). Right for the post-rollup regime where per-conv
+series are ≤ ~1e6 points: parallelism comes from the *number of
+conversations* (the reference's own thread scaling is flat beyond 2
+cores — BASELINE.md — so cross-series data parallelism is the scaling
+axis that matters).
 
-1. ``matrix_profile`` — whole-series-per-task: groupBy(conv_id, metric)
-   → applyInPandas runs the NumPy kernel on the assembled series. Right
-   for the post-rollup regime where per-conv series are ≤ ~1e6 points:
-   parallelism comes from the *number of conversations* (the reference's
-   own thread scaling is flat beyond 2 cores — BASELINE.md — so
-   cross-series data parallelism is the scaling axis that matters).
+Mega-threads take the one tile planner instead, the SCAMP
+tile-and-merge scheme shared by the self-join
+(``matrix_profile_chunked``) and the AB join
+(``matrix_profile_ab_chunked``):
 
-2. ``matrix_profile_chunked`` — intra-series parallelism for mega
-   threads via SCAMP-style 2-D tiles: the distance matrix's upper
-   triangle splits into blocks, each tile task receives only the two
-   O(T + w) series segments its block touches (never the whole
-   series), computes an exact Pearson-space partial
-   (kernels.mpx_tile_partial), and partials merge with
-   max_by(corr, tie → earliest global diagonal) before one final
-   Pearson→Euclidean conversion. Shuffle volume is O(k·n) per conv and
-   no single row holds a full series, so mega-threads clear both the
-   B×n replication cost and Spark's 2 GiB row ceiling.
+1. ``_segments`` cuts each series into bounded, overlapping segments of
+   at most T + w - 1 points, so no row ever holds a whole series;
+2. ``_tiles`` lists each series' tiles — the distance matrix's upper
+   triangle for a self-join, the full A × B rectangle for an AB join —
+   and equi-joins every tile to its two segments;
+3. ``_tiled_profile`` computes each tile's exact Pearson-space partials
+   (kernels.mpx_tile_partial) and merges all partials of an offset once
+   by max over (corr, −d, −idx), d the signed diagonal (column position
+   − row position), before one final Pearson→Euclidean conversion. That
+   key is MPX's strict ``>`` over ascending diagonals
+   (matrixprofile.go:1038-1044) and gives both paths' tie rules.
 
-``matrix_profile_auto`` routes conversations between the two by
-length; the tile width (= chunk_threshold) fixes per-task work, so
-task count grows with series length instead of task size.
+Shuffle volume is O(k·n) per conv and no single row holds a full series,
+so mega-threads clear both the B×n replication cost and Spark's 2 GiB
+row ceiling. ``matrix_profile_auto`` routes conversations between the
+whole-series path and the tiles by length; the tile width
+(= chunk_threshold) fixes per-task work, so task count grows with
+series length instead of task size.
 
 Output schema (FIXTURES.md A.2):
   mp_profile(conv_id, metric, w int, offset int, mp double, idx int)
@@ -34,7 +46,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..kernels.kmp import KMP
@@ -84,10 +96,6 @@ SEGMENT_SCHEMA = T.StructType(
 )
 
 
-def _series_values(pdf: pd.DataFrame) -> np.ndarray:
-    return pdf.sort_values("bucket_s")["value"].to_numpy(dtype=np.float64)
-
-
 def cpu_partitions(df: DataFrame, factor: int = 3) -> int:
     """Partition count for CPU-heavy kernel stages: a few tasks per core.
 
@@ -134,37 +142,47 @@ def assemble_series(
     )
 
 
+def _mp_frame(row, w: int, mp: np.ndarray, idx: np.ndarray) -> pd.DataFrame:
+    """One series' profile at window w as MP_SCHEMA rows."""
+    return pd.DataFrame(
+        {
+            "conv_id": row.conv_id,
+            "metric": row.metric,
+            "w": np.int32(w),
+            "offset": np.arange(mp.size, dtype=np.int32),
+            "mp": mp,
+            "idx": idx,
+        }
+    )
+
+
 def matrix_profile(
     series: DataFrame,
     w: int,
     opts: MPOpts | None = None,
     value_col: str = "value",
-    min_len: int | None = None,
 ) -> DataFrame:
     """Self-join MP per (conv_id, metric); series shorter than w+1 are
     skipped (no profile defined). Series are assembled to array rows
     JVM-side; the NumPy kernel sees one row per conversation."""
-    return matrix_profile_assembled(
-        assemble_series(series, value_col), w, opts, min_len
-    )
+    return matrix_profile_assembled(assemble_series(series, value_col), w, opts)
 
 
 def matrix_profile_assembled(
     assembled: DataFrame,
     w: int,
     opts: MPOpts | None = None,
-    min_len: int | None = None,
-    spread: bool = True,
 ) -> DataFrame:
     """MP over pre-assembled array rows (conv_id, metric, vals) — the
     entry point when series are already stored array-per-conv (e.g. a
-    materialized tier), skipping the assembly shuffle.
+    materialized tier), skipping the assembly shuffle. Series shorter
+    than w+1 are skipped (no profile defined).
 
-    spread=True round-robins the (compact) array rows across
-    cpu_partitions before the kernel: the assembly aggregation leaves
-    rows hash-laid-out by conv_id, and for fleets whose series count is
-    near the partition count, hash collisions put 2-3 series in some
-    kernel tasks while others sit empty — the stage makespan becomes 3
+    The (compact) array rows are round-robined across cpu_partitions
+    before the kernel: the assembly aggregation leaves rows
+    hash-laid-out by conv_id, and for fleets whose series count is near
+    the partition count, hash collisions put 2-3 series in some kernel
+    tasks while others sit empty — the stage makespan becomes 3
     series-times instead of 2 (measured on the 64×16k bench fleet).
     The extra exchange moves only one array row per series (MBs), not
     the long-format points, and the kernel needs no key clustering.
@@ -173,41 +191,28 @@ def matrix_profile_assembled(
     collided task idles half the cluster for a whole kernel-time); for
     MANY-SMALL-SERIES corpus fleets the keys already balance the
     partitions (~30+ series each) and the spread only adds an array
-    shuffle + a stage barrier (−1.1 s on a 10× fleet) — such callers
-    should pass spread=False to keep assembly→kernel stage fusion."""
+    shuffle + a stage barrier (−1.1 s on a 10× fleet)."""
     opts = opts or MPOpts()
-    min_len = max(min_len or 0, w + 1)
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             for row in pdf.itertuples(index=False):
                 vals = np.asarray(row.vals, dtype=np.float64)
-                if vals.size < min_len:
+                if vals.size < w + 1:
                     continue
                 mp = MatrixProfile(vals, None, w).compute(opts)
-                n = mp.mp.size
-                yield pd.DataFrame(
-                    {
-                        "conv_id": row.conv_id,
-                        "metric": row.metric,
-                        "w": np.int32(w),
-                        "offset": np.arange(n, dtype=np.int32),
-                        "mp": mp.mp,
-                        "idx": mp.idx,
-                    }
-                )
+                yield _mp_frame(row, w, mp.mp, mp.idx)
 
-    if spread:
-        assembled = assembled.repartition(cpu_partitions(assembled))
-    return assembled.mapInPandas(kernel, MP_SCHEMA)
+    return assembled.repartition(cpu_partitions(assembled)).mapInPandas(
+        kernel, MP_SCHEMA
+    )
 
 
 def _grid_positions(
     src: DataFrame, keys: list[str], grid_step: int | None
 ) -> DataFrame:
     """(keys..., value, pos, n): each point's rank within its key group
-    ordered by bucket_s, plus the group size — shared by the self-join
-    and AB tile builders.
+    ordered by bucket_s, plus the group size (see _segments).
 
     grid_step=None sorts each group with a row_number window: a SINGLE
     task per group, the last whole-series bottleneck for a 10^8-point
@@ -257,6 +262,198 @@ def _grid_positions(
     return reg.unionByName(irr)
 
 
+def _segments(
+    src: DataFrame, keys: list[str], w: int, t_width: Column, grid_step: int | None
+) -> DataFrame:
+    """Cut every series of ``src`` (keys..., bucket_s, value) into
+    bounded, overlapping segments: one row (keys..., seg, vals, len,
+    t_width) per segment, where vals holds the points at positions
+    [seg*T, (seg+1)*T + w - 1) — at most T + w - 1 of them, never the
+    whole series — and len = n - w + 1 is the series' offset count.
+    Series shorter than w + 1 have no profile and get no segments.
+
+    ``t_width`` (T) is a long column over the series length ``n``; it is
+    floored at w here so that each point feeds at most two segments.
+    ``grid_step``: see _grid_positions."""
+    pts = _grid_positions(src, keys, grid_step).where(F.col("n") >= w + 1)
+    pts = pts.withColumn("len", F.col("n") - w + 1).withColumn(
+        "t_width", F.greatest(t_width, F.lit(w).cast("long"))
+    )
+    # point at pos p feeds segment s iff s*T <= p < (s+1)*T + w - 1:
+    # candidates are p//T and p//T - 1 (the latter iff p mod T < w - 1)
+    s_hi = (F.col("pos") / F.col("t_width")).cast("long")
+    seg_candidates = F.array(
+        F.when(s_hi < F.ceil(F.col("len") / F.col("t_width")).cast("long"), s_hi),
+        F.when((s_hi >= 1) & (F.col("pos") % F.col("t_width") < w - 1), s_hi - 1),
+    )
+    seg_pts = pts.select(
+        *keys,
+        "value",
+        "pos",
+        "len",
+        "t_width",
+        F.explode(F.filter(seg_candidates, lambda s: s.isNotNull())).alias("seg"),
+    )
+    return seg_pts.groupBy(*keys, "seg").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "value"))), lambda s: s["value"]
+        ).alias("vals"),
+        F.first("len").alias("len"),
+        F.first("t_width").alias("t_width"),
+    )
+
+
+def _tiles(
+    row_segs: DataFrame, col_segs: DataFrame, keys: list[str], self_join: bool
+) -> DataFrame:
+    """Tile-task table over two segment tables (see _segments): one row
+    (keys..., r, c, row_vals, col_vals, len_a, t_width) per tile, where
+    r / c index the row / column segment. A self-join (row_segs and
+    col_segs are the same table) lists each series' upper triangle
+    0 <= r <= c; an AB join lists the full rectangle of A segments × B
+    segments. The tile list explodes from each series' last segment
+    index and equi-joins to its two segments on (keys, seg), so every
+    shuffle is keyed on bounded keys."""
+
+    def last_seg(segs: DataFrame, name: str) -> DataFrame:
+        return segs.groupBy(*keys).agg(F.max("seg").alias(name))
+
+    last = last_seg(row_segs, "r_max")
+    last = (
+        last.withColumn("c_max", F.col("r_max"))
+        if self_join
+        else last.join(last_seg(col_segs, "c_max"), keys)
+    )
+    c_first = F.col("r") if self_join else F.lit(0)
+    tiles = last.select(
+        *keys, F.explode(F.sequence(F.lit(0), F.col("r_max"))).alias("r"), "c_max"
+    ).select(*keys, "r", F.explode(F.sequence(c_first, F.col("c_max"))).alias("c"))
+    row_seg = row_segs.select(
+        *keys,
+        F.col("seg").alias("r"),
+        F.col("vals").alias("row_vals"),
+        F.col("len").alias("len_a"),
+        "t_width",
+    )
+    col_seg = col_segs.select(
+        *keys, F.col("seg").alias("c"), F.col("vals").alias("col_vals")
+    )
+    # round-robin: tile rows are uniform-cost kernel tasks; even spread
+    # beats by-key hashing (collisions idle ~1/e of the slots) and the
+    # tile kernel needs no key clustering
+    return (
+        tiles.join(row_seg, [*keys, "r"])
+        .join(col_seg, [*keys, "c"])
+        .repartition(cpu_partitions(row_segs))
+    )
+
+
+def _tiled_profile(
+    tiles: DataFrame,
+    keys: list[str],
+    w: int,
+    self_join: bool,
+    remap_neg_corr: bool = False,
+) -> DataFrame:
+    """Matrix profile of a tile table (see _tiles). Each tile task
+    computes the exact Pearson-space partials (kernels.mpx_tile_partial,
+    FFT-seeded diagonals) of its row offsets (direction 'ab') and of its
+    column offsets ('ba'); the partials of each offset merge once, then
+    convert to Euclidean. Output: (keys..., w, offset, mp, idx) for a
+    self-join, where both directions profile the same series, and
+    (keys..., direction, w, offset, mp, idx) for an AB join.
+
+    Merge key: max over (corr, -d, -idx), d = column position - row
+    position — the signed diagonal. MPX traverses diagonals in
+    ascending order with strict > (matrixprofile.go:1038-1044), so the
+    earliest diagonal wins a tie:
+    - self-join: d = |idx - offset| > 0, so the nearest diagonal wins,
+      and at equal distance the lower idx, because the whole-series
+      kernel touches the diagonal side first within a diagonal. The
+      same key merges a diagonal tile's two overlapping partials.
+    - AB join: 'ab' rows (offset in A, idx in B) keep the lowest B idx,
+      'ba' rows (offset in B, idx in A) the highest A idx. The
+      whole-series Go kernel's own AB tie order (mpxab's descending-j
+      pass before mpxba's ascending-j, matrixprofile.go:1057-1198) is a
+      pass-structure artifact the tiles cannot reproduce without
+      order-aware interiors; raw-float AB tie parity with Go is pinned by
+      matrix_profile_ab (golden fixtures), and a tie-specific pytest pins
+      this rule.
+    """
+    part_schema = T.StructType(
+        [tiles.schema[k] for k in keys]
+        + [
+            T.StructField("direction", T.StringType(), False),
+            T.StructField("offset", T.IntegerType(), False),
+            T.StructField("corr", T.DoubleType(), True),
+            T.StructField("idx", T.LongType(), True),
+        ]
+    )
+
+    def tile_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from ..kernels.matrix_profile import mpx_tile_partial
+
+        for pdf in it:
+            for row in pdf.itertuples(index=False):
+                t_w = int(row.t_width)
+                r0 = int(row.r) * t_w
+                c0 = int(row.c) * t_w
+                # segment seg holds min(t_w, len - seg*t_w) offsets; the
+                # kernel clamps n_row = n_col = t_w to that
+                mpr, idr, mpc, idc = mpx_tile_partial(
+                    np.asarray(row.row_vals, dtype=np.float64),
+                    np.asarray(row.col_vals, dtype=np.float64),
+                    r0,
+                    c0,
+                    t_w,
+                    t_w,
+                    w,
+                    remap_neg_corr=remap_neg_corr,
+                    self_join=self_join,
+                )
+                key = {k: getattr(row, k) for k in keys}
+                yield pd.concat(
+                    [
+                        pd.DataFrame(
+                            {
+                                **key,
+                                "direction": direction,
+                                "offset": np.arange(o0, o0 + mp.size, dtype=np.int32),
+                                "corr": mp,
+                                "idx": idx,
+                            }
+                        )
+                        for direction, o0, mp, idx in (
+                            ("ab", r0, mpr, idr),
+                            ("ba", c0, mpc, idc),
+                        )
+                    ],
+                    ignore_index=True,
+                )
+
+    partials = tiles.mapInPandas(tile_kernel, part_schema)
+    diag = F.when(
+        F.col("direction") == "ab", F.col("idx") - F.col("offset")
+    ).otherwise(F.col("offset") - F.col("idx"))
+    out_keys = keys if self_join else [*keys, "direction"]
+    merged = partials.groupBy(*out_keys, "offset").agg(
+        F.max_by(
+            F.struct("corr", "idx"),
+            F.struct(
+                F.col("corr"), (-diag).alias("nd"), (-F.col("idx")).alias("ni")
+            ),
+        ).alias("best")
+    )
+    # p2e: d = sqrt(2w(1 - min(corr, 1)))  (util/util.go:266-274)
+    return merged.select(
+        *out_keys,
+        F.lit(w).cast("int").alias("w"),
+        "offset",
+        F.sqrt(2.0 * w * (1.0 - F.least(F.col("best.corr"), F.lit(1.0)))).alias("mp"),
+        F.col("best.idx").alias("idx"),
+    )
+
+
 def chunked_tile_inputs(
     src: DataFrame,
     w: int,
@@ -269,12 +466,10 @@ def chunked_tile_inputs(
     src: (conv_id, metric, bucket_s, value). Output: one row per
     upper-triangular tile (conv_id, metric, r, c, row_vals, col_vals,
     len_a, t_width) where each vals array is bounded by t_width + w - 1
-    points — never the whole series. Stages: window-sort positions,
-    assign each point to the ≤2 overlapping segments that need it,
-    aggregate segments to bounded array rows, cross the tile list with
-    the two segments per tile via equi-joins. All built-ins; the only
-    shuffles are the position sort, the segment aggregation, and the
-    two segment joins — each keyed on bounded (conv, metric, seg) keys.
+    points — never the whole series (_segments, then _tiles). All
+    built-ins; the only shuffles are the position sort, the segment
+    aggregation, and the two segment joins — each keyed on bounded
+    (conv, metric, seg) keys.
 
     Tile sizing, exactly one of:
     - ``tile_points``: FIXED tile width — the scale knob. Per-task work
@@ -298,76 +493,12 @@ def chunked_tile_inputs(
     """
     if (k is None) == (tile_points is None):
         raise ValueError("pass exactly one of k / tile_points")
-
-    pts = _grid_positions(src, ["conv_id", "metric"], grid_step)
-    pts = pts.where(F.col("n") >= w + 1)
-    # tile width floored at w so the two-candidate segment assignment
-    # below stays valid (w - 1 <= T)
     if tile_points is not None:
-        t_width_col = F.lit(max(int(tile_points), w)).cast("long")
+        t_width = F.lit(int(tile_points)).cast("long")
     else:
-        t_width_col = F.greatest(
-            F.ceil((F.col("n") - w + 1) / k).cast("long"), F.lit(w)
-        )
-    pts = pts.withColumn("len_a", F.col("n") - w + 1).withColumn(
-        "t_width", t_width_col
-    )
-    # point at pos p feeds segment s iff s*T <= p < (s+1)*T + w - 1:
-    # candidates are p//T and p//T - 1 (the latter iff p mod T < w - 1)
-    s_hi = (F.col("pos") / F.col("t_width")).cast("long")
-    seg_candidates = F.array(
-        F.when(s_hi < F.ceil(F.col("len_a") / F.col("t_width")).cast("long"), s_hi),
-        F.when((s_hi >= 1) & (F.col("pos") % F.col("t_width") < w - 1), s_hi - 1),
-    )
-    seg_pts = pts.select(
-        "conv_id",
-        "metric",
-        "value",
-        "pos",
-        "len_a",
-        "t_width",
-        F.explode(F.filter(seg_candidates, lambda s: s.isNotNull())).alias("seg"),
-    )
-    segments = seg_pts.groupBy("conv_id", "metric", "seg").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "value"))), lambda s: s["value"]
-        ).alias("vals"),
-        F.first("len_a").alias("len_a"),
-        F.first("t_width").alias("t_width"),
-    )
-
-    # tile list: (conv, metric, r, c) for 0 <= r <= c < n_segs
-    convs = segments.groupBy("conv_id", "metric").agg(F.max("seg").alias("max_seg"))
-    tiles = convs.select(
-        "conv_id",
-        "metric",
-        F.explode(F.sequence(F.lit(0), F.col("max_seg"))).alias("r"),
-        "max_seg",
-    ).select(
-        "conv_id",
-        "metric",
-        "r",
-        F.explode(F.sequence(F.col("r"), F.col("max_seg"))).alias("c"),
-    )
-    row_seg = segments.select(
-        "conv_id",
-        "metric",
-        F.col("seg").alias("r"),
-        F.col("vals").alias("row_vals"),
-        "len_a",
-        "t_width",
-    )
-    col_seg = segments.select(
-        "conv_id", "metric", F.col("seg").alias("c"), F.col("vals").alias("col_vals")
-    )
-    # round-robin: tile rows are uniform-cost kernel tasks; even spread
-    # beats by-key hashing (collisions idle ~1/e of the slots) and the
-    # tile kernel needs no key clustering
-    return (
-        tiles.join(row_seg, ["conv_id", "metric", "r"])
-        .join(col_seg, ["conv_id", "metric", "c"])
-        .repartition(cpu_partitions(src))
-    )
+        t_width = F.ceil((F.col("n") - w + 1) / k).cast("long")
+    segs = _segments(src, ["conv_id", "metric"], w, t_width, grid_step)
+    return _tiles(segs, segs, ["conv_id", "metric"], self_join=True)
 
 
 def matrix_profile_chunked(
@@ -382,21 +513,14 @@ def matrix_profile_chunked(
     """MPX with intra-series parallelism via SCAMP-style 2-D tiles.
 
     The distance matrix's upper triangle is tiled into k×k blocks
-    (k(k+1)/2 ≈ n_batches tasks per conv); each tile task receives ONLY
-    the two overlapping series segments its block touches — O(T + w)
-    points each — instead of the whole series. Shuffle volume is
-    O(k·n) per conv (vs B·n for the old exploded-array plan) and no
-    single row ever holds the full series, so a 10^8-point conversation
-    no longer approaches Spark's 2 GiB row ceiling.
-
-    Stages: (1) window-sort positions per conv, (2) assign each point
-    to the ≤2 segments that need it (built-ins: explode over a filtered
-    candidate array), (3) aggregate each segment to one bounded array
-    row, (4) build the tile list and equi-join the two segments per
-    tile, (5) kernel task computes the tile partial in Pearson space
-    (kernels.mpx_tile_partial — exact, FFT-seeded diagonals), (6) merge
-    partials with max_by(corr, tie → earliest global diagonal), then
-    convert to Euclidean (p2e). Currently Euclidean output only.
+    (k(k+1)/2 ≈ n_batches tasks per conv), or into fixed-width blocks of
+    ``tile_points`` offsets; each tile task receives ONLY the two
+    overlapping series segments its block touches — O(T + w) points
+    each — instead of the whole series (chunked_tile_inputs). Shuffle
+    volume is O(k·n) per conv and no single row ever holds the full
+    series, so a 10^8-point conversation never approaches Spark's 2 GiB
+    row ceiling. Partials merge by the planner's diagonal tie rule
+    (_tiled_profile). Currently Euclidean output only.
     """
     opts = opts or MPOpts(algorithm="mpx")
     if not opts.euclidean:
@@ -405,121 +529,13 @@ def matrix_profile_chunked(
         "conv_id", "metric", "bucket_s", F.col(value_col).alias("value")
     )
     if tile_points is not None:
-        tile_in = chunked_tile_inputs(src, w, tile_points=tile_points, grid_step=grid_step)
+        tiles = chunked_tile_inputs(src, w, tile_points=tile_points, grid_step=grid_step)
     else:
         # k tiles per side so that k(k+1)/2 ≈ n_batches tasks per conv
         k = max(1, int(round(((8 * n_batches + 1) ** 0.5 - 1) / 2)))
-        tile_in = chunked_tile_inputs(src, w, k=k, grid_step=grid_step)
-    part_schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("metric", T.StringType(), False),
-            T.StructField("offset", T.IntegerType(), False),
-            T.StructField("corr", T.DoubleType(), True),
-            T.StructField("idx", T.LongType(), True),
-        ]
-    )
-
-    def tile_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.matrix_profile import mpx_tile_partial
-
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                t_w = int(row.t_width)
-                len_a = int(row.len_a)
-                r0 = int(row.r) * t_w
-                c0 = int(row.c) * t_w
-                n_row = min(t_w, len_a - r0)
-                n_col = min(t_w, len_a - c0)
-                if n_row <= 0 or n_col <= 0:
-                    continue
-                mpr, idr, mpc, idc = mpx_tile_partial(
-                    np.asarray(row.row_vals, dtype=np.float64),
-                    np.asarray(row.col_vals, dtype=np.float64),
-                    r0,
-                    c0,
-                    n_row,
-                    n_col,
-                    w,
-                    remap_neg_corr=opts.remap_neg_corr,
-                )
-                frames = [
-                    pd.DataFrame(
-                        {
-                            "conv_id": row.conv_id,
-                            "metric": row.metric,
-                            "offset": np.arange(r0, r0 + mpr.size, dtype=np.int32),
-                            "corr": mpr,
-                            "idx": idr,
-                        }
-                    )
-                ]
-                if not (row.r == row.c):
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "conv_id": row.conv_id,
-                                "metric": row.metric,
-                                "offset": np.arange(c0, c0 + mpc.size, dtype=np.int32),
-                                "corr": mpc,
-                                "idx": idc,
-                            }
-                        )
-                    )
-                else:
-                    # diagonal tile: row/col ranges coincide; emit the
-                    # element-wise better of the two partials. Exact
-                    # Pearson ties break toward the smaller |idx - offset|
-                    # (earliest global diagonal), and at EQUAL distance
-                    # toward the col partial, whose idx = offset - d is
-                    # the lower one — the whole-series kernel touches the
-                    # diagonal side (lower idx) first within a diagonal,
-                    # so strict > there means lower idx wins (r02 advisor
-                    # item). Same key as the cross-tile max_by merge.
-                    offs = np.arange(r0, r0 + mpr.size, dtype=np.int64)
-                    better = (mpc > mpr) | (
-                        (mpc == mpr) & (np.abs(idc - offs) <= np.abs(idr - offs))
-                    )
-                    mpr2 = np.where(better, mpc, mpr)
-                    idr2 = np.where(better, idc, idr)
-                    frames = [
-                        pd.DataFrame(
-                            {
-                                "conv_id": row.conv_id,
-                                "metric": row.metric,
-                                "offset": np.arange(r0, r0 + mpr.size, dtype=np.int32),
-                                "corr": mpr2,
-                                "idx": idr2,
-                            }
-                        )
-                    ]
-                yield pd.concat(frames, ignore_index=True)
-
-    partials = tile_in.mapInPandas(tile_kernel, part_schema)
-    # merge: max corr; ties -> earliest global diagonal (MPX's strict >
-    # with ascending diagonals, matrixprofile.go:1038-1044); at EQUAL
-    # diagonal distance (candidates offset-d and offset+d both tied) ->
-    # the lower idx, because the whole-series kernel's diagonal-side
-    # touch precedes the offset-side touch within a diagonal
-    diag_dist = F.abs(F.col("idx") - F.col("offset"))
-    merged = partials.groupBy("conv_id", "metric", "offset").agg(
-        F.max_by(
-            F.struct("corr", "idx"),
-            F.struct(
-                F.col("corr"),
-                (-diag_dist).alias("nd"),
-                (-F.col("idx")).alias("ni"),
-            ),
-        ).alias("best")
-    )
-    # p2e: d = sqrt(2w(1 - min(corr, 1)))  (util/util.go:266-274)
-    return merged.select(
-        "conv_id",
-        "metric",
-        F.lit(w).cast("int").alias("w"),
-        "offset",
-        F.sqrt(2.0 * w * (1.0 - F.least(F.col("best.corr"), F.lit(1.0)))).alias("mp"),
-        F.col("best.idx").alias("idx"),
+        tiles = chunked_tile_inputs(src, w, k=k, grid_step=grid_step)
+    return _tiled_profile(
+        tiles, ["conv_id", "metric"], w, self_join=True, remap_neg_corr=opts.remap_neg_corr
     )
 
 
@@ -663,49 +679,21 @@ def pan_matrix_profile(
     """Pan-MP per conv: one profile per window in [lower_m, upper_m]
     (pmp.go:119-161). Output keyed by (conv_id, metric, w, offset)."""
     opts = opts or MPOpts()
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("metric", T.StringType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("offset", T.IntegerType(), False),
-            T.StructField("mp", T.DoubleType(), True),
-            T.StructField("idx", T.LongType(), True),
-        ]
-    )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id, metric = key
-        vals = _series_values(pdf)
-        if vals.size < upper_m + 2:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        p = PMP(vals).compute(lower_m, upper_m, opts)
-        frames = []
-        for level, w in enumerate(range(lower_m, upper_m + 1)):
-            if w not in p.pwindows:
-                continue
-            prof = p.pmp[level][: vals.size - w + 1]
-            idx = p.pidx[level][: vals.size - w + 1]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "conv_id": conv_id,
-                        "metric": metric,
-                        "w": np.int32(w),
-                        "offset": np.arange(prof.size, dtype=np.int32),
-                        "mp": prof,
-                        "idx": idx,
-                    }
-                )
-            )
-        if not frames:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        return pd.concat(frames, ignore_index=True)
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            for row in pdf.itertuples(index=False):
+                vals = np.asarray(row.vals, dtype=np.float64)
+                if vals.size < upper_m + 2:
+                    continue
+                p = PMP(vals).compute(lower_m, upper_m, opts)
+                for level, w in enumerate(range(lower_m, upper_m + 1)):
+                    if w not in p.pwindows:
+                        continue
+                    n = vals.size - w + 1
+                    yield _mp_frame(row, w, p.pmp[level][:n], p.pidx[level][:n])
 
-    src = series.select("conv_id", "metric", "bucket_s", "value").repartition(
-        cpu_partitions(series), "conv_id", "metric"
-    )
-    return src.groupBy("conv_id", "metric").applyInPandas(kernel, schema)
+    return assemble_series(series).mapInPandas(kernel, MP_SCHEMA)
 
 
 def pan_matrix_profile_distributed(
@@ -770,16 +758,7 @@ def pan_matrix_profile_distributed(
                     continue
                 fused = pmp_fused(vals, list(row.ws), opts)
                 for w, (mp, idx) in fused.items():
-                    yield pd.DataFrame(
-                        {
-                            "conv_id": row.conv_id,
-                            "metric": row.metric,
-                            "w": np.int32(w),
-                            "offset": np.arange(mp.size, dtype=np.int32),
-                            "mp": mp,
-                            "idx": idx,
-                        }
-                    )
+                    yield _mp_frame(row, w, mp, idx)
 
     return tasks.mapInPandas(kernel, MP_SCHEMA)
 
@@ -803,22 +782,12 @@ def mpdist_pairs(
     (broadcast), and each pair's MPDist runs as one Arrow-batched task.
     """
     opts = opts or MPOpts()
-    src = series.select("conv_id", "metric", "bucket_s", "value")
     if conv_ids is not None:
         keys = series.sparkSession.createDataFrame(
             [(c,) for c in conv_ids], "conv_id string"
         )
-        src = src.join(F.broadcast(keys), "conv_id", "left_semi")
-    assembled = (
-        src.groupBy("conv_id", "metric")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("bucket_s", "value"))),
-                lambda s: s["value"],
-            ).alias("vals")
-        )
-        .where(F.size("vals") > w * 2)
-    )
+        series = series.join(F.broadcast(keys), "conv_id", "left_semi")
+    assembled = assemble_series(series).where(F.size("vals") > w * 2)
     ranked = (
         assembled
         if conv_ids is not None
@@ -879,30 +848,28 @@ def streaming_update_check(series: DataFrame, w: int, split: float = 0.8) -> Dat
         ]
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id, metric = key
-        vals = _series_values(pdf)
-        cut = int(vals.size * split)
-        if cut < w + 2 or vals.size - cut < 1:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        try:
-            inc = MatrixProfile(vals[:cut], None, w).compute(MPOpts(algorithm="stomp"))
-            inc.update(vals[cut:])
-            full = MatrixProfile(vals, None, w).compute(MPOpts(algorithm="stomp"))
-        except ValueError:
-            # constant query window: the reference's Update errors the
-            # same way (ZNormalize zero-std, util/util.go:33-35) — skip
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        diff = float(np.nanmax(np.abs(inc.mp - full.mp))) if full.mp.size else 0.0
-        return pd.DataFrame(
-            [(conv_id, metric, vals.size, vals.size - cut, diff)],
-            columns=["conv_id", "metric", "n", "n_new", "max_abs_diff"],
-        )
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for row in pdf.itertuples(index=False):
+                vals = np.asarray(row.vals, dtype=np.float64)
+                cut = int(vals.size * split)
+                if cut < w + 2 or vals.size - cut < 1:
+                    continue
+                try:
+                    inc = MatrixProfile(vals[:cut], None, w).compute(MPOpts(algorithm="stomp"))
+                    inc.update(vals[cut:])
+                    full = MatrixProfile(vals, None, w).compute(MPOpts(algorithm="stomp"))
+                except ValueError:
+                    # constant query window: the reference's Update errors
+                    # the same way (ZNormalize zero-std, util/util.go:33-35)
+                    # — skip
+                    continue
+                diff = float(np.nanmax(np.abs(inc.mp - full.mp))) if full.mp.size else 0.0
+                out.append((row.conv_id, row.metric, vals.size, vals.size - cut, diff))
+            yield pd.DataFrame(out, columns=["conv_id", "metric", "n", "n_new", "max_abs_diff"])
 
-    src = series.select("conv_id", "metric", "bucket_s", "value").repartition(
-        cpu_partitions(series), "conv_id", "metric"
-    )
-    return src.groupBy("conv_id", "metric").applyInPandas(kernel, schema)
+    return assemble_series(series).mapInPandas(kernel, schema)
 
 
 def matrix_profile_ab(
@@ -972,35 +939,6 @@ def matrix_profile_ab(
     return joined.repartition(cpu_partitions(joined)).mapInPandas(kernel, schema)
 
 
-def _ab_segments(
-    src: DataFrame, w: int, t_w: int, side: str, grid_step: int | None = None
-) -> DataFrame:
-    """Overlapping fixed-width segments of one AB-join side:
-    (conv_id, seg, vals, len_p) with vals bounded by t_w + w - 1.
-    grid_step: see _grid_positions — arithmetic positions for regular
-    grids instead of a single-task per-conv sort."""
-    pts = _grid_positions(src, ["conv_id"], grid_step).where(F.col("n") >= w + 1)
-    pts = pts.withColumn("len_p", F.col("n") - w + 1)
-    s_hi = (F.col("pos") / t_w).cast("long")
-    seg_candidates = F.array(
-        F.when(s_hi < F.ceil(F.col("len_p") / t_w).cast("long"), s_hi),
-        F.when((s_hi >= 1) & (F.col("pos") % t_w < w - 1), s_hi - 1),
-    )
-    seg_pts = pts.select(
-        "conv_id",
-        "value",
-        "pos",
-        "len_p",
-        F.explode(F.filter(seg_candidates, lambda s: s.isNotNull())).alias("seg"),
-    )
-    return seg_pts.groupBy("conv_id", "seg").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "value"))), lambda s: s["value"]
-        ).alias(f"{side}_vals"),
-        F.first("len_p").alias(f"{side}_len"),
-    )
-
-
 def matrix_profile_ab_chunked(
     series_a: DataFrame,
     series_b: DataFrame,
@@ -1011,108 +949,22 @@ def matrix_profile_ab_chunked(
     """Tiled AB-join matrix profile: the full A-offsets × B-offsets
     rectangle splits into fixed-width tiles; each task receives one
     O(T+w) segment per side (kernels.mpx_tile_partial with
-    self_join=False — no exclusion zone, both directions). Same scale
-    contract as the self-join tiles: per-task work ~tile_points² cells,
-    shuffle volume O((na+nb)·k), no whole-series rows. Output matches
-    matrix_profile_ab: (conv_id, direction ab|ba, w, offset, mp, idx).
+    self_join=False — no exclusion zone, both directions). Same planner
+    and scale contract as the self-join tiles: per-task work
+    ~tile_points² cells, shuffle volume O((na+nb)·k), no whole-series
+    rows. Output matches matrix_profile_ab: (conv_id, direction ab|ba,
+    w, offset, mp, idx); ties follow _tiled_profile's diagonal rule.
     grid_step: arithmetic positions for regular-grid input (e.g. a
     gap-filled tier) instead of a single-task per-conv sort — see
     _grid_positions.
     """
-    t_w = max(int(tile_points), w)
-    a_src = series_a.select("conv_id", "bucket_s", "value")
-    b_src = series_b.select("conv_id", "bucket_s", "value")
-    a_segs = _ab_segments(a_src, w, t_w, "a", grid_step)
-    b_segs = _ab_segments(b_src, w, t_w, "b", grid_step)
-    tiles = (
-        a_segs.withColumnRenamed("seg", "r")
-        .join(b_segs.withColumnRenamed("seg", "c"), "conv_id")
-        .repartition(cpu_partitions(series_a))
-    )
-
-    part_schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("direction", T.StringType(), False),
-            T.StructField("offset", T.IntegerType(), False),
-            T.StructField("corr", T.DoubleType(), True),
-            T.StructField("idx", T.LongType(), True),
-        ]
-    )
-
-    def tile_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.matrix_profile import mpx_tile_partial
-
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                r0 = int(row.r) * t_w
-                c0 = int(row.c) * t_w
-                n_row = min(t_w, int(row.a_len) - r0)
-                n_col = min(t_w, int(row.b_len) - c0)
-                if n_row <= 0 or n_col <= 0:
-                    continue
-                mpr, idr, mpc, idc = mpx_tile_partial(
-                    np.asarray(row.a_vals, dtype=np.float64),
-                    np.asarray(row.b_vals, dtype=np.float64),
-                    r0,
-                    c0,
-                    n_row,
-                    n_col,
-                    w,
-                    self_join=False,
-                )
-                yield pd.concat(
-                    [
-                        pd.DataFrame(
-                            {
-                                "conv_id": row.conv_id,
-                                "direction": "ab",
-                                "offset": np.arange(r0, r0 + mpr.size, dtype=np.int32),
-                                "corr": mpr,
-                                "idx": idr,
-                            }
-                        ),
-                        pd.DataFrame(
-                            {
-                                "conv_id": row.conv_id,
-                                "direction": "ba",
-                                "offset": np.arange(c0, c0 + mpc.size, dtype=np.int32),
-                                "corr": mpc,
-                                "idx": idc,
-                            }
-                        ),
-                    ],
-                    ignore_index=True,
-                )
-
-    partials = tiles.mapInPandas(tile_kernel, part_schema)
-    # tie rule: smallest signed diagonal d = j_B - i_A wins — the first
-    # diagonal mpx_tile_partial's ascending-d traversal touches, on BOTH
-    # sides of the tile (A side at fixed i visits j ascending; B side at
-    # fixed j visits i descending — both are d ascending with strict >).
-    # For direction 'ab' (offset in A, idx in B) d = idx - offset, so the
-    # key minimizes idx; for 'ba' (offset in B, idx in A) d = offset -
-    # idx, so the key MAXIMIZES idx. The whole-series Go kernel's own AB
-    # tie order (mpxab's descending-j pass before mpxba's ascending-j,
-    # matrixprofile.go:1057-1198) is a pass-structure artifact the tiles
-    # cannot reproduce without order-aware interiors; raw-float AB tie
-    # parity with Go is pinned by matrix_profile_ab (golden fixtures),
-    # and the tiled path pins THIS rule with a tie-specific pytest.
-    tie = F.when(F.col("direction") == "ab", -F.col("idx")).otherwise(F.col("idx"))
-    merged = partials.groupBy("conv_id", "direction", "offset").agg(
-        F.max_by(
-            F.struct("corr", "idx"),
-            F.struct(F.col("corr"), tie.alias("ni")),
-        ).alias("best")
-    )
-    return merged.select(
-        "conv_id",
-        "direction",
-        F.lit(w).cast("int").alias("w"),
-        "offset",
-        F.sqrt(2.0 * w * (1.0 - F.least(F.col("best.corr"), F.lit(1.0)))).alias("mp"),
-        F.col("best.idx").alias("idx"),
-    )
+    t_width = F.lit(int(tile_points)).cast("long")
+    segs = [
+        _segments(s.select("conv_id", "bucket_s", "value"), ["conv_id"], w, t_width, grid_step)
+        for s in (series_a, series_b)
+    ]
+    tiles = _tiles(*segs, ["conv_id"], self_join=False)
+    return _tiled_profile(tiles, ["conv_id"], w, self_join=False)
 
 
 def matrix_profile_auto(
@@ -1121,7 +973,6 @@ def matrix_profile_auto(
     opts: MPOpts | None = None,
     value_col: str = "value",
     chunk_threshold: int = 8192,
-    n_batches: int = 8,
     grid_step: int | None = None,
 ) -> DataFrame:
     """Skew-aware MP: routes each conversation by series length.
@@ -1148,7 +999,7 @@ def matrix_profile_auto(
     routed = src.join(lengths, ["conv_id", "metric"])
     short = routed.where(F.col("n") < chunk_threshold).drop("n")
     long = routed.where(F.col("n") >= chunk_threshold).drop("n")
-    prof_short = matrix_profile(short, w, opts, min_len=None)
+    prof_short = matrix_profile(short, w, opts)
     prof_long = matrix_profile_chunked(
         long, w, opts=opts, tile_points=chunk_threshold, grid_step=grid_step
     )

@@ -49,7 +49,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -61,6 +64,14 @@ def get_spark(
     return spark
 
 
+def _default_driver_memory() -> str:
+    """min(48g, ~40% of physical RAM): in local mode the driver JVM is
+    the whole engine, and a heap sized past physical RAM gets the JVM
+    OOM-killed mid-run instead of spilling."""
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, min(48, int(phys_gib * 0.4)))}g"
+
+
 def _warm_up(spark: SparkSession) -> None:
     """Absorb one-time session start-up costs at CREATION time: JIT and
     whole-stage-codegen compiler warm-up, shuffle machinery init, and
@@ -69,9 +80,15 @@ def _warm_up(spark: SparkSession) -> None:
     has nothing to do with the query — misleading in benchmarks and
     wasted on the critical path of short jobs. Runs tiny synthetic jobs
     only (spark.range): no input data is read, nothing is cached, no
-    result is retained. Disable with SPARK_GRAFT_NO_WARMUP=1."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1":
+    result is retained. Disable with SPARK_GRAFT_NO_WARMUP=1.
+
+    Runs once per live SparkContext: the marker lives on the context
+    object, so a later get_spark() on the same warm session skips it,
+    and a session created after stop() (a new context) warms up again."""
+    sc = spark.sparkContext
+    if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1" or getattr(sc, "_graft_warm", False):
         return
+    sc._graft_warm = True
     try:
         import pandas as pd  # noqa: F401
         from pyspark.sql import functions as F

@@ -89,9 +89,14 @@ class TestTilePlumbing:
     def test_grid_step_irregular_fallback(self, spark):
         """A declared grid_step that does NOT match the data (irregular
         bucket spacing, duplicate-free but gappy) must fall back to the
-        window-sort path and still reproduce the whole-series profile."""
+        window-sort path and still reproduce the whole-series profile —
+        on the self-join tiles and on the AB-join tiles."""
         from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile, MPOpts
-        from go_matrixprofile_spark.operators.profile import matrix_profile_chunked
+        from go_matrixprofile_spark.operators.profile import (
+            matrix_profile_ab,
+            matrix_profile_ab_chunked,
+            matrix_profile_chunked,
+        )
 
         n, w = 300, 8
         rng = np.random.default_rng(7)
@@ -118,6 +123,22 @@ class TestTilePlumbing:
         assert len(got) == want.mp.size
         np.testing.assert_allclose(got["mp"].to_numpy(), want.mp, atol=1e-9)
         assert (got["idx"].to_numpy() == want.idx).all()
+
+        # AB join: the same irregular A against a second series on the
+        # same irregular buckets
+        src_b = src.withColumn("value", F.sin(F.col("value")) + F.col("bucket_s") % 7)
+        key = ["conv_id", "direction", "offset"]
+        want_ab = matrix_profile_ab(src, src_b, w=w).orderBy(key).toPandas()
+        got_ab = (
+            matrix_profile_ab_chunked(src, src_b, w=w, tile_points=64, grid_step=1)
+            .orderBy(key)
+            .toPandas()
+        )
+        assert len(got_ab) == len(want_ab) == 2 * (n - w + 1)
+        np.testing.assert_allclose(
+            got_ab["mp"].to_numpy(), want_ab["mp"].to_numpy(), atol=1e-9
+        )
+        assert (got_ab["idx"].to_numpy() == want_ab["idx"].to_numpy()).all()
 
 
 class TestTileEdgeCases:

@@ -315,7 +315,7 @@ class TestAutoRouting:
             )
         df = spark.createDataFrame(pd.concat(rows))
         auto = (
-            matrix_profile_auto(df, w=16, chunk_threshold=1000, n_batches=4)
+            matrix_profile_auto(df, w=16, chunk_threshold=1000)
             .orderBy("conv_id", "offset")
             .toPandas()
         )
@@ -381,3 +381,19 @@ class TestJsonlSource:
         # materialize full rows, as a dead-letter sink would
         bad = quarantined.toPandas()
         assert bad["_corrupt_record"].notna().sum() == 1
+
+
+class TestSession:
+    def test_warm_context_skips_warm_up(self, spark):
+        """get_spark() on a live context that already warmed up runs no
+        Spark job: the warm-up runs once per SparkContext."""
+        from go_matrixprofile_spark.session import get_spark
+
+        sc = spark.sparkContext
+        sc.setJobGroup("get-spark-again", "second get_spark() call")
+        try:
+            again = get_spark("pytest", cores=4, shuffle_partitions=8)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert again.sparkContext is sc
+        assert list(sc.statusTracker().getJobIdsForGroup("get-spark-again")) == []

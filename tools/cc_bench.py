@@ -20,9 +20,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, ROOT)
 
-EDGES_PATH_TMPL = "/root/repo/_data/cc_edges_{docs}.parquet"
+EDGES_PATH_TMPL = os.path.join(ROOT, "_data", "cc_edges_{docs}.parquet")
 
 
 def _ensure_edges(spark, n_docs: int) -> str:

@@ -22,9 +22,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, ROOT)
 
-DOCS_PATH_TMPL = "/root/repo/_data/docchain_{docs}.parquet"
+DOCS_PATH_TMPL = os.path.join(ROOT, "_data", "docchain_{docs}.parquet")
 _LETTERS = "abcdefghij"
 
 

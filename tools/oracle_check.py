@@ -8,13 +8,14 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -45,8 +46,6 @@ def main():
     # from the documents parquet at SQL-generation time) must read the
     # SAME sf dir this check runs against — the env default is the
     # driver's sf0.01 contract, so local runs at other scales need this
-    import os
-
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
     import __spark_entry__ as entrymod
