@@ -162,24 +162,6 @@ def minhash_wide(
     )
 
 
-def minhash_signatures(
-    documents: DataFrame, k_shingle: int = 8, n_hashes: int = 8
-) -> DataFrame:
-    """Long-format (doc_id, h_idx, minhash) view of minhash_wide."""
-    wide = minhash_wide(documents, k_shingle, n_hashes)
-    return wide.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("h_idx"), F.col(f"mh{i}").alias("minhash"))
-                    for i in range(n_hashes)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc_id", "e.h_idx", "e.minhash")
-
-
 def minhash_lsh_pairs(
     documents: DataFrame,
     k_shingle: int = 8,
@@ -363,27 +345,6 @@ def jaccard_verify_pairs(
     )
 
 
-def _cc_materializer(pairs: DataFrame, reliable: bool, fn_name: str):
-    """Shared per-round materialization strategy for the iterative
-    component algorithms: localCheckpoint (executor-local, zero FS
-    round-trips) by default, reliable checkpoint() against the
-    configured durable dir when requested — validated up front so a
-    cluster job fails before any compute, not mid-iteration."""
-    if reliable and pairs.sparkSession.sparkContext.getCheckpointDir() is None:
-        raise ValueError(
-            f"{fn_name}(reliable=True) needs a reliable checkpoint "
-            "directory: call spark.sparkContext.setCheckpointDir("
-            "<durable path>) first"
-        )
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        if reliable:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    return _materialize
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "a_id",
@@ -429,7 +390,20 @@ def connected_components(
     storage, e.g. an object-store path) so any executor loss replays
     from the FS copy instead of killing the job.
     """
-    _materialize = _cc_materializer(pairs, reliable, "connected_components")
+    # validated up front so a cluster job fails before any compute, not
+    # mid-iteration
+    if reliable and pairs.sparkSession.sparkContext.getCheckpointDir() is None:
+        raise ValueError(
+            "connected_components(reliable=True) needs a reliable checkpoint "
+            "directory: call spark.sparkContext.setCheckpointDir("
+            "<durable path>) first"
+        )
+
+    def _materialize(df: DataFrame) -> DataFrame:
+        if reliable:
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=True)
+
     # checkpoint edges FIRST, then derive labels from the checkpointed
     # edges: deriving labels from the raw plan would execute the whole
     # upstream pair pipeline (LSH joins, Jaccard verification, winnowing)
@@ -483,110 +457,6 @@ def connected_components(
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-    max_iter: int = 50,
-    reliable: bool = False,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii 2014,
-    "Connected Components in MapReduce and Beyond") — the benchmark
-    alternative to ``connected_components``'s min-label+pointer-jump.
-
-    Per round over the symmetric edge list:
-
-      large-star: every node u links each STRICTLY LARGER neighbor to
-                  min(Γ(u) ∪ {u}) — tall trees flatten toward small ids
-      small-star: every node u links its smaller neighbors AND itself
-                  to min(Γ<(u) ∪ {u}) — stars contract onto their root
-
-    Both phases are one groupBy(min) + one join, keyed by node id. The
-    edge set provably converges to disjoint stars rooted at component
-    minima in O(log² n) rounds (O(log n) in practice); convergence here
-    = the edge-set fingerprint (count + order-independent hash sum)
-    unchanged across a full large+small round.
-
-    Output matches ``connected_components``: (node, component) with
-    component = min member id, one row per node appearing in any pair
-    (a node appearing only in self-pairs is its own singleton, same as
-    the min-label variant).
-    """
-    _materialize = _cc_materializer(pairs, reliable, "connected_components_star")
-    allp = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    raw = allp.where(F.col("u") != F.col("v"))
-    # node universe from the UNFILTERED pairs: self-pair-only nodes must
-    # still emit their singleton row (contract parity with minlabel)
-    nodes = _materialize(
-        allp.select(F.col("u").alias("node"))
-        .unionByName(allp.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    edges = _materialize(
-        raw.unionByName(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-    )
-    prev_sig: tuple[int, int] | None = None
-    for _ in range(max_iter):
-        # ---- large-star: (v, m) for v in Γ(u), v > u; m = min(Γ(u) ∪ {u})
-        m = (
-            edges.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", F.col("u")).alias("m"))
-        )
-        large = (
-            edges.where(F.col("v") > F.col("u"))
-            .join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
-        und = large.unionByName(
-            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        edges = _materialize(und)
-        # ---- small-star: (x, m) for x in Γ<(u) ∪ {u}, x != m
-        sm = edges.where(F.col("v") < F.col("u"))
-        m2 = sm.groupBy("u").agg(F.min("v").alias("m"))
-        linked = sm.join(m2, "u")
-        small = (
-            linked.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(
-                linked.select(F.col("u").alias("u"), F.col("m").alias("v"))
-            )
-            .where(F.col("u") != F.col("v"))
-        )
-        und2 = small.unionByName(
-            small.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        edges = _materialize(und2)
-        # order-independent edge-set fingerprint: count + sum of per-edge
-        # hashes (an equal-count, equal-hash-sum different edge set is a
-        # hash-collision event, not a plausible iteration state)
-        sig_row = edges.agg(
-            F.count("*").alias("c"),
-            # decimal sum: a long sum of 64-bit hashes overflows ANSI
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
-        ).first()
-        sig = (sig_row["c"], sig_row["s"])
-        if sig == prev_sig:
-            # stars: every remaining edge points node -> component min
-            stars = edges.where(F.col("v") < F.col("u")).select(
-                F.col("u").alias("node"), F.col("v").alias("component")
-            )
-            return (
-                nodes.join(stars, "node", "left")
-                .select(
-                    "node",
-                    F.coalesce("component", F.col("node")).alias("component"),
-                )
-            )
-        prev_sig = sig
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} rounds"
-    )
-
-
 def dedup_groups(
     documents: DataFrame,
     pairs: DataFrame | None = None,
@@ -594,7 +464,6 @@ def dedup_groups(
     max_iter: int = 25,
     verify_jaccard: float | None = 0.5,
     reliable: bool = False,
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Resolve near-dup PAIRS into dedup groups with one survivor each:
     (doc_id, component_id, keep) for EVERY document.
@@ -622,15 +491,6 @@ def dedup_groups(
     the union of whichever sources apply. Defaults to
     verified-minhash ∪ simhash ∪ winnow over `documents` (embedding
     cosine pairs are unioned in when `embeddings` is given).
-
-    algorithm: "minlabel" (min-label propagation + pointer jumping, the
-    default) or "star" (alternating large-star/small-star). Measured
-    crossover (tools/cc_bench.py, BENCH_BASELINE.md): on the verified
-    sparse graphs this default pipeline produces, minlabel's two
-    shuffles/round edge out star's four; on heavy raw-candidate graphs
-    (~600k junk edges, hub components — the verify_jaccard=None
-    recall-first regime) star converges ~1.5× faster. Pick "star" when
-    clustering unverified candidates or any graph with huge components.
     """
     from .simsearch import cosine_near_dup_pairs
 
@@ -660,10 +520,7 @@ def dedup_groups(
                     F.col("b_id").cast("long").alias("b_id"),
                 )
             )
-    if algorithm not in ("minlabel", "star"):
-        raise ValueError("algorithm must be 'minlabel' or 'star'")
-    cc = connected_components if algorithm == "minlabel" else connected_components_star
-    comp = cc(
+    comp = connected_components(
         pairs.select("a_id", "b_id"), max_iter=max_iter, reliable=reliable
     )
     return (

@@ -80,13 +80,13 @@ def _warm_up(spark: SparkSession) -> None:
     has nothing to do with the query — misleading in benchmarks and
     wasted on the critical path of short jobs. Runs tiny synthetic jobs
     only (spark.range): no input data is read, nothing is cached, no
-    result is retained. Disable with SPARK_GRAFT_NO_WARMUP=1.
+    result is retained.
 
     Runs once per live SparkContext: the marker lives on the context
     object, so a later get_spark() on the same warm session skips it,
     and a session created after stop() (a new context) warms up again."""
     sc = spark.sparkContext
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1" or getattr(sc, "_graft_warm", False):
+    if getattr(sc, "_graft_warm", False):
         return
     sc._graft_warm = True
     try:

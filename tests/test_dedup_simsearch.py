@@ -362,31 +362,6 @@ class TestConnectedComponents:
         for r in got.itertuples():
             assert r.component == want[r.node], r
 
-        # the large-star/small-star variant must agree exactly
-        from go_matrixprofile_spark.operators.dedup import (
-            connected_components_star,
-        )
-
-        got2 = connected_components_star(pairs).toPandas()
-        assert set(got2["node"]) == touched
-        for r in got2.itertuples():
-            assert r.component == want[r.node], r
-
-    def test_star_variant_on_chain_and_star(self, spark):
-        """Pathological shapes for star contraction: a 64-chain (deep
-        tree) and a hub star (one huge Γ) both resolve to min-rooted
-        components."""
-        from go_matrixprofile_spark.operators.dedup import (
-            connected_components_star,
-        )
-
-        n = 64
-        chain = pd.DataFrame({"a_id": range(n - 1), "b_id": range(1, n)})
-        hub = pd.DataFrame({"a_id": [1000] * 50, "b_id": range(1001, 1051)})
-        pairs = spark.createDataFrame(pd.concat([chain, hub]))
-        got = connected_components_star(pairs, max_iter=20).toPandas()
-        assert (got[got["node"] < 1000]["component"] == 0).all()
-        assert (got[got["node"] >= 1000]["component"] == 1000).all()
 
     def test_dedup_groups_end_to_end(self, spark):
         """dedup_groups over planted duplicate docs: exact copies and
