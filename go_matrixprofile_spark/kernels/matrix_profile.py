@@ -16,9 +16,10 @@ Parity-critical details preserved (see SURVEY.md §7.4):
   (earliest diagonal wins, matrixprofile.go:1038-1044).
 - Exclusion zones: w/2 for STAMP/STOMP/STMP (matrixprofile.go:481,505),
   max(1, w/4) for MPX (matrixprofile.go:998-1001).
-- Within one MPX diagonal a cell's diagonal-side update precedes its
-  offset-side update (offset j-diag is visited before offset j), so the
-  vectorized version applies the diagonal-side mask first.
+- Within one MPX self-join diagonal a cell's diagonal-side update
+  precedes its offset-side update (offset j-diag is visited before
+  offset j); mpx_tile_partial, the one MPX self-join kernel, keeps this
+  by applying its col-side mask first.
 - mass divides by b_std without a zero-guard (matrixprofile.go:461);
   constant windows yield Inf/NaN exactly as in Go.
 """
@@ -49,9 +50,11 @@ _MAXINT = np.iinfo(np.int64).max
 class MPOpts:
     """Options mirroring MPOpts (matrixprofile.go:350-370).
 
-    Defaults: MPX, sample 1.0, Euclidean. n_jobs defaults to 1 (each
-    Spark task is single-threaded; intra-series parallelism comes from
-    diagonal batches mapped to separate tasks, not threads).
+    Defaults: MPX, sample 1.0, Euclidean. n_jobs (default 1) batches
+    only the STOMP/STAMP rows and the MPX AB join; the MPX self-join is
+    one tile and returns the p=1 answer at any n_jobs. Each Spark task
+    is single-threaded: intra-series parallelism comes from tiles
+    mapped to separate tasks, not threads.
     ``seed`` is an extension: the reference's STAMP uses unseeded
     rand.Perm (matrixprofile.go:684), so its sampled output is
     irreproducible; we require a seed for determinism.
@@ -297,135 +300,36 @@ class MatrixProfile:
         len_a = self.a.size - w + 1
         len_b = self.b.size - w + 1
         self.mp, self.idx = self._alloc(len_a)
-        if not self.self_join:
-            self.mpb, self.idxb = self._alloc(len_b)
+        if self.self_join:
+            # the whole series is the one diagonal tile of the upper triangle
+            if max(1, w // 4) <= len_a:
+                mp, idx, _, _ = mpx_tile_partial(
+                    self.a, self.a, 0, 0, len_a, len_a, w, self.opts.remap_neg_corr
+                )
+                if self.opts.euclidean:
+                    mp = p2e(mp, w)
+                # NaN cells keep _alloc's (inf, MAXINT)
+                self._merge([(mp, idx, None, None)], self.opts.euclidean)
+            return
+        self.mpb, self.idxb = self._alloc(len_b)
 
         mua, siga = mu_invn(self.a, w)
-        if self.self_join:
-            mub, sigb = mua, siga
-        else:
-            mub, sigb = mu_invn(self.b, w)
-
-        # difference streams: df[i+1] = ½(A[w+i]-A[i]);
-        # dg[i+1] = (A[w+i]-μ[i+1]) + (A[i]-μ[i])  (matrixprofile.go:904-919)
-        dfa = np.zeros(len_a)
-        dga = np.zeros(len_a)
-        dfa[1:] = 0.5 * (self.a[w : w + len_a - 1] - self.a[: len_a - 1])
-        dga[1:] = (self.a[w : w + len_a - 1] - mua[1:len_a]) + (
-            self.a[: len_a - 1] - mua[: len_a - 1]
-        )
-        if self.self_join:
-            dfb, dgb = dfa, dga
-        else:
-            dfb = np.zeros(len_b)
-            dgb = np.zeros(len_b)
-            dfb[1:] = 0.5 * (self.b[w : w + len_b - 1] - self.b[: len_b - 1])
-            dgb[1:] = (self.b[w : w + len_b - 1] - mub[1:len_b]) + (
-                self.b[: len_b - 1] - mub[: len_b - 1]
-            )
+        mub, sigb = mu_invn(self.b, w)
+        dfa, dga = _diff_streams(self.a, mua, w)
+        dfb, dgb = _diff_streams(self.b, mub, w)
 
         n_jobs = max(1, self.opts.n_jobs)
-        scheme = diag_batching_scheme(len_a, n_jobs)
-        if self.self_join:
-            c0_all = self._mpx_c0_all(mua)
-            results = [
-                self._mpx_batch(bidx, mua, siga, dfa, dga, bsz, c0_all)
-                for bidx, bsz in scheme
-            ]
-        else:
-            results = [
-                self._mpxab_batch(bidx, mua, siga, dfa, dga, mub, sigb, dfb, dgb, bsz)
-                for bidx, bsz in scheme
-            ]
-        self._merge(results, self.opts.euclidean)
-
-        if self.self_join:
-            return
-        scheme = diag_batching_scheme(len_b, n_jobs)
+        args = (mua, siga, dfa, dga, mub, sigb, dfb, dgb)
         results = [
-            self._mpxba_batch(bidx, mua, siga, dfa, dga, mub, sigb, dfb, dgb, bsz)
-            for bidx, bsz in scheme
+            self._mpxab_batch(bidx, *args, bsz)
+            for bidx, bsz in diag_batching_scheme(len_a, n_jobs)
         ]
         self._merge(results, self.opts.euclidean)
-
-    def _mpx_c0_all(self, mu):
-        """Seed correlations for EVERY diagonal in one FFT sliding dot:
-        c0[diag] = <a[diag:diag+w] - mu[diag], a[:w] - mu[0]>
-                 = slidingdot(a[:w]-mu[0], a)[diag] - mu[diag]·Σ(a[:w]-mu[0]).
-        Replaces len_a small np.dot calls (one per diagonal) with a
-        single O(n log n) pass — ~15-20% of the whole MPX kernel."""
-        a, w = self.a, self.w
-        len_a = a.size - w + 1
-        first = a[:w] - mu[0]
-        bf = np.fft.rfft(a)
-        return cross_correlate(first, a, bf)[:len_a] - mu[:len_a] * first.sum()
-
-    def _mpx_batch(self, idx, mu, sig, df, dg, batch_size, c0_all=None):
-        """One diagonal batch of the self-join (matrixprofile.go:996-1054).
-
-        Per-diagonal vectorized: each diagonal is one cumsum + a handful
-        of in-cache vector ops over the remaining offsets (the working
-        vectors are O(n) and L2-resident, which beats 2-D blocking —
-        measured: large blocks fall out of cache and run 5x slower,
-        (D×T)-tiled variants with cumsum carry also lose, and packing
-        (df, dg) into complex128 to fuse the two cross-multiplies into
-        one Im(z·z') pass loses too: complex multiply computes the
-        unused real part and .imag reads strided).
-        Updates preserve Go's exact tie order: strict > in Pearson space
-        with diagonals ascending, and within a diagonal the
-        diagonal-side touch of a cell precedes its offset-side touch
-        (offset j-diag is visited before offset j).
-        """
-        a, w = self.a, self.w
-        excl = max(1, w // 4)
-        len_a = a.size - w + 1
-        if idx + excl > len_a:
-            return None
-        mp = np.full(len_a, -1.0)
-        mpidx = np.zeros(len_a, dtype=np.int64)
-        remap = self.opts.remap_neg_corr
-        d_start = idx + excl
-        d_end = min(idx + batch_size + excl, len_a)
-        if d_start >= d_end:
-            if self.opts.euclidean:
-                mp = p2e(mp, w)
-            return mp, mpidx, None, None
-        if c0_all is None:
-            c0_all = self._mpx_c0_all(mu)
-
-        max_o = len_a - d_start
-        t1 = np.empty(max_o)
-        t2 = np.empty(max_o)
-        for diag in range(d_start, d_end):
-            omax = len_a - diag
-            b1 = t1[:omax]
-            b2 = t2[:omax]
-            # c evolves by +df[o]*dg[o+diag] + df[o+diag]*dg[o] per offset;
-            # term[0] is 0 (df[0]=dg[0]=0), so seeding it with c0 before
-            # the cumsum folds the "+ c0" into the scan (one fewer pass)
-            np.multiply(df[:omax], dg[diag : diag + omax], out=b1)
-            np.multiply(df[diag : diag + omax], dg[:omax], out=b2)
-            b1 += b2
-            b1[0] += c0_all[diag]
-            np.cumsum(b1, out=b1)
-            np.multiply(sig[:omax], sig[diag : diag + omax], out=b2)
-            b1 *= b2
-            if remap:
-                np.abs(b1, out=b1)
-            # diagonal-side update first (offset j-diag precedes offset j)
-            seg = mp[diag : diag + omax]
-            upd = np.nonzero(b1 > seg)[0]
-            if upd.size:
-                seg[upd] = b1[upd]
-                mpidx[diag + upd] = upd
-            # offset-side update
-            upd = np.nonzero(b1 > mp[:omax])[0]
-            if upd.size:
-                mp[upd] = b1[upd]
-                mpidx[upd] = upd + diag
-        if self.opts.euclidean:
-            mp = p2e(mp, w)
-        return mp, mpidx, None, None
+        results = [
+            self._mpxba_batch(bidx, *args, bsz)
+            for bidx, bsz in diag_batching_scheme(len_b, n_jobs)
+        ]
+        self._merge(results, self.opts.euclidean)
 
     def _mpxab_batch(self, idx, mua, siga, dfa, dga, mub, sigb, dfb, dgb, batch_size):
         """AB-direction diagonal batch (matrixprofile.go:1057-1126)."""
@@ -758,6 +662,17 @@ def compute_mp(a, b=None, w: int = 0, opts: MPOpts | None = None) -> MatrixProfi
     return MatrixProfile(a, b, w).compute(opts)
 
 
+def _diff_streams(a: np.ndarray, mu: np.ndarray, w: int):
+    """MPX difference streams (matrixprofile.go:904-919):
+    df[i+1] = ½(a[w+i] - a[i]); dg[i+1] = (a[w+i] - μ[i+1]) + (a[i] - μ[i])."""
+    n = a.size - w + 1
+    df = np.zeros(n)
+    dg = np.zeros(n)
+    df[1:] = 0.5 * (a[w : w + n - 1] - a[: n - 1])
+    dg[1:] = (a[w : w + n - 1] - mu[1:n]) + (a[: n - 1] - mu[: n - 1])
+    return df, dg
+
+
 def mpx_tile_partial(
     x: np.ndarray,
     y: np.ndarray,
@@ -769,7 +684,9 @@ def mpx_tile_partial(
     remap_neg_corr: bool = False,
     self_join: bool = True,
 ):
-    """SCAMP-style 2-D tile partial of the MPX self-join.
+    """SCAMP-style 2-D tile partial of the MPX join — the one MPX
+    self-join kernel: the whole-series self-join is the single diagonal
+    tile ``mpx_tile_partial(a, a, 0, 0, len_a, len_a, w)``.
 
     The distributed decomposition for mega-series: instead of shipping
     the WHOLE series to every diagonal-batch task (shuffle volume B×n
@@ -783,7 +700,9 @@ def mpx_tile_partial(
     [c0, c0 + n_col + w - 1); c0 >= r0 (upper triangle). The tile
     computes corr for all pairs (gi, gj) with gi in the row range,
     gj in the col range and gj - gi >= excl = max(1, w//4) — the MPX
-    exclusion zone (matrixprofile.go:998-1001).
+    exclusion zone (matrixprofile.go:998-1001). A diagonal tile
+    (r0 == c0) keeps ONE profile: mp_col / idx_col alias mp_row /
+    idx_row, so each offset holds its best neighbour on either side.
 
     AB-join (self_join=False): x is a segment of series A at offset r0,
     y a segment of series B at offset c0 — independent coordinate
@@ -792,19 +711,24 @@ def mpx_tile_partial(
     A-side partials with B-space neighbor indices and mp_col the
     reverse.
 
-    Both use the same difference-stream recurrence as mpxBatch:
-    local df/dg/mu/sig at position p equal their global values because
-    every quantity is window-local. Diagonal seeds come from one FFT
-    sliding dot per side (two total). Diagonals are traversed in
-    ascending global-diagonal order with strict > (earliest diagonal
-    wins ties, Go parity).
+    Both use the difference-stream recurrence of mpxBatch: local
+    df/dg/mu/sig at position p equal their global values because every
+    quantity is window-local. Each diagonal is seeded from one FFT
+    sliding dot per side (two total) with the first window centred:
+    seed[j] = <x[:w] - mux[0], y[j:j+w]> - muy[j]·Σ(x[:w] - mux[0]).
+    The raw form dot - w·mux[0]·muy[j] cancels catastrophically at
+    large offsets (error ~2 at 1e9 for w=8); centring one side keeps
+    it to ~1e-6 there. Diagonals are traversed in ascending
+    global-diagonal order with strict > (earliest diagonal wins ties,
+    Go parity); within a diagonal the col side updates before the row
+    side — its cell (gj) meets the diagonal from the left, so on a
+    diagonal tile the lower neighbour index wins an equal-|d| tie, as
+    in Go.
 
     Returns (mp_row, idx_row, mp_col, idx_col): Pearson-space partial
     profiles for the tile's row / col offset ranges, neighbor indices
     GLOBAL. Callers convert with p2e and merge partials by max-corr.
     """
-    from .mass import cross_correlate
-
     x = np.ascontiguousarray(x, dtype=np.float64)
     y = np.ascontiguousarray(y, dtype=np.float64)
     excl = max(1, w // 4)
@@ -814,21 +738,13 @@ def mpx_tile_partial(
     nc = min(n_col, ly)
     mp_row = np.full(max(nr, 0), -1.0)
     idx_row = np.zeros(max(nr, 0), dtype=np.int64)
-    mp_col = np.full(max(nc, 0), -1.0)
-    idx_col = np.zeros(max(nc, 0), dtype=np.int64)
+    if self_join and r0 == c0:
+        mp_col, idx_col = mp_row, idx_row
+    else:
+        mp_col = np.full(max(nc, 0), -1.0)
+        idx_col = np.zeros(max(nc, 0), dtype=np.int64)
     if nr <= 0 or nc <= 0:
         return mp_row, idx_row, mp_col, idx_col
-
-    mux, sigx = mu_invn(x, w)
-    muy, sigy = mu_invn(y, w)
-    dfx = np.zeros(lx)
-    dgx = np.zeros(lx)
-    dfx[1:] = 0.5 * (x[w : w + lx - 1] - x[: lx - 1])
-    dgx[1:] = (x[w : w + lx - 1] - mux[1:lx]) + (x[: lx - 1] - mux[: lx - 1])
-    dfy = np.zeros(ly)
-    dgy = np.zeros(ly)
-    dfy[1:] = 0.5 * (y[w : w + ly - 1] - y[: ly - 1])
-    dgy[1:] = (y[w : w + ly - 1] - muy[1:ly]) + (y[: ly - 1] - muy[: ly - 1])
 
     if self_join:
         off = c0 - r0
@@ -839,14 +755,21 @@ def mpx_tile_partial(
     if d_min > d_max:
         return mp_row, idx_row, mp_col, idx_col
 
-    # seeds: <x[i:i+w]-mux[i], y[j:j+w]-muy[j]> = dot - w·mux[i]·muy[j]
-    seeds_pos = cross_correlate(x[:w], y)[:ly] - float(w) * mux[0] * muy[:ly]
-    seeds_neg = (
-        cross_correlate(y[:w], x)[:lx] - float(w) * muy[0] * mux[:lx]
-        if d_min < 0
-        else None
-    )
+    mux, sigx = mu_invn(x, w)
+    dfx, dgx = _diff_streams(x, mux, w)
+    if y is x:  # whole-series self-join: one cache-resident set of streams
+        muy, sigy, dfy, dgy = mux, sigx, dfx, dgx
+    else:
+        muy, sigy = mu_invn(y, w)
+        dfy, dgy = _diff_streams(y, muy, w)
+    fx = x[:w] - mux[0]
+    seeds_pos = cross_correlate(fx, y)[:ly] - muy[:ly] * fx.sum()
+    if d_min < 0:
+        fy = y[:w] - muy[0]
+        seeds_neg = cross_correlate(fy, x)[:lx] - mux[:lx] * fy.sum()
 
+    # one cumsum + a few L2-resident vector ops per diagonal (2-D blocking
+    # and complex128 packing of (df, dg) both measured slower)
     t1 = np.empty(max(nr, nc))
     t2 = np.empty(max(nr, nc))
     for d in range(d_min, d_max + 1):
@@ -865,24 +788,26 @@ def mpx_tile_partial(
         np.multiply(dfx[i0 : i0 + m], dgy[j0 : j0 + m], out=b1)
         np.multiply(dfy[j0 : j0 + m], dgx[i0 : i0 + m], out=b2)
         b1 += b2
-        b1[0] = seed  # first cell carries the exact FFT seed, no step term
+        # the first term is ±0 (df/dg are 0 at a segment's position 0),
+        # so adding the seed there folds it into the scan
+        b1[0] += seed
         np.cumsum(b1, out=b1)
         np.multiply(sigx[i0 : i0 + m], sigy[j0 : j0 + m], out=b2)
         b1 *= b2
         if remap_neg_corr:
             np.abs(b1, out=b1)
-        # row side first (global cell gi = r0+i0+t is the smaller index —
-        # mirrors the whole-series kernel's diagonal-side-first order)
-        seg = mp_row[i0 : i0 + m]
-        upd = np.nonzero(b1 > seg)[0]
-        if upd.size:
-            seg[upd] = b1[upd]
-            idx_row[i0 + upd] = c0 + j0 + upd
+        # col side first: on a diagonal tile cell gj's left neighbour
+        # gj - d is met before its right neighbour gj + d
         seg = mp_col[j0 : j0 + m]
         upd = np.nonzero(b1 > seg)[0]
         if upd.size:
             seg[upd] = b1[upd]
-            idx_col[j0 + upd] = r0 + i0 + upd
+            idx_col[j0 : j0 + m][upd] = upd + (r0 + i0)
+        seg = mp_row[i0 : i0 + m]
+        upd = np.nonzero(b1 > seg)[0]
+        if upd.size:
+            seg[upd] = b1[upd]
+            idx_row[i0 : i0 + m][upd] = upd + (c0 + j0)
     return mp_row, idx_row, mp_col, idx_col
 
 

@@ -24,9 +24,10 @@ tile-and-merge scheme shared by the self-join
    and equi-joins every tile to its two segments;
 3. ``_tiled_profile`` computes each tile's exact Pearson-space partials
    (kernels.mpx_tile_partial) and merges all partials of an offset once
-   by max over (corr, −d, −idx), d the signed diagonal (column position
-   − row position), before one final Pearson→Euclidean conversion. That
-   key is MPX's strict ``>`` over ascending diagonals
+   by max over (corr, −d, −idx) — d = |idx − offset| for a self-join,
+   the signed diagonal (column position − row position) for an AB
+   join — before one final Pearson→Euclidean conversion. That key is
+   MPX's strict ``>`` over ascending diagonals
    (matrixprofile.go:1038-1044) and gives both paths' tie rules.
 
 Shuffle volume is O(k·n) per conv and no single row holds a full series,
@@ -358,20 +359,22 @@ def _tiled_profile(
     """Matrix profile of a tile table (see _tiles). Each tile task
     computes the exact Pearson-space partials (kernels.mpx_tile_partial,
     FFT-seeded diagonals) of its row offsets (direction 'ab') and of its
-    column offsets ('ba'); the partials of each offset merge once, then
-    convert to Euclidean. Output: (keys..., w, offset, mp, idx) for a
-    self-join, where both directions profile the same series, and
-    (keys..., direction, w, offset, mp, idx) for an AB join.
+    column offsets ('ba'); a self-join diagonal tile (r == c) holds one
+    profile of both sides and emits it once, as 'ab'. The partials of
+    each offset merge once, then convert to Euclidean. Output:
+    (keys..., w, offset, mp, idx) for a self-join, where both directions
+    profile the same series, and (keys..., direction, w, offset, mp,
+    idx) for an AB join.
 
-    Merge key: max over (corr, -d, -idx), d = column position - row
-    position — the signed diagonal. MPX traverses diagonals in
+    Merge key: max over (corr, -d, -idx). MPX traverses diagonals in
     ascending order with strict > (matrixprofile.go:1038-1044), so the
     earliest diagonal wins a tie:
-    - self-join: d = |idx - offset| > 0, so the nearest diagonal wins,
-      and at equal distance the lower idx, because the whole-series
-      kernel touches the diagonal side first within a diagonal. The
-      same key merges a diagonal tile's two overlapping partials.
-    - AB join: 'ab' rows (offset in A, idx in B) keep the lowest B idx,
+    - self-join: d = |idx - offset|, so the nearest diagonal wins, and
+      at equal distance the lower idx (the kernel's col-side-first
+      order). A diagonal tile's profile holds neighbours on both sides,
+      so a signed d would rank any left neighbour first.
+    - AB join: d = column position - row position, the signed diagonal.
+      'ab' rows (offset in A, idx in B) keep the lowest B idx,
       'ba' rows (offset in B, idx in A) the highest A idx. The
       whole-series Go kernel's own AB tie order (mpxab's descending-j
       pass before mpxba's ascending-j, matrixprofile.go:1057-1198) is a
@@ -412,6 +415,9 @@ def _tiled_profile(
                     self_join=self_join,
                 )
                 key = {k: getattr(row, k) for k in keys}
+                sides = [("ab", r0, mpr, idr)]
+                if mpc is not mpr:
+                    sides.append(("ba", c0, mpc, idc))
                 yield pd.concat(
                     [
                         pd.DataFrame(
@@ -423,18 +429,19 @@ def _tiled_profile(
                                 "idx": idx,
                             }
                         )
-                        for direction, o0, mp, idx in (
-                            ("ab", r0, mpr, idr),
-                            ("ba", c0, mpc, idc),
-                        )
+                        for direction, o0, mp, idx in sides
                     ],
                     ignore_index=True,
                 )
 
     partials = tiles.mapInPandas(tile_kernel, part_schema)
-    diag = F.when(
-        F.col("direction") == "ab", F.col("idx") - F.col("offset")
-    ).otherwise(F.col("offset") - F.col("idx"))
+    diag = (
+        F.abs(F.col("idx") - F.col("offset"))
+        if self_join
+        else F.when(
+            F.col("direction") == "ab", F.col("idx") - F.col("offset")
+        ).otherwise(F.col("offset") - F.col("idx"))
+    )
     out_keys = keys if self_join else [*keys, "direction"]
     merged = partials.groupBy(*out_keys, "offset").agg(
         F.max_by(

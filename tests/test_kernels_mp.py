@@ -9,10 +9,12 @@ Fixtures from /root/reference/matrixprofile_test.go (canonical series at
 
 import numpy as np
 import pytest
+from numpy.lib.stride_tricks import sliding_window_view
 
 from go_matrixprofile_spark.kernels import MatrixProfile, MPOpts, compute_mp, mpdist
 from go_matrixprofile_spark.kernels.mass import cross_correlate, distance_profile, mass
-from go_matrixprofile_spark.kernels.util import mov_mean_std
+from go_matrixprofile_spark.kernels.matrix_profile import mpx_tile_partial
+from go_matrixprofile_spark.kernels.util import mov_mean_std, p2e
 
 SIG = np.array([0.0, 0.99, 1.0, 0.0, 0.0, 0.98, 1.0, 0.0, 0.0, 0.96, 1.0, 0.0])
 WANT_MP = np.array(
@@ -176,15 +178,78 @@ class TestMpxRemapNegCorr:
         np.testing.assert_array_equal(mp.idx, [6, 3, 4, 7, 8, 3, 2, 3, 4])
 
     def test_remap_parallel_values(self):
-        # The reference only pins remap Idx at p=1 (matrixprofile_test.go:
-        # 641-644): remapped |corr| ties resolve differently across batch
-        # merges. Values must still be invariant at any p.
+        # The reference pins remap Idx at p=1 (matrixprofile_test.go:
+        # 641-644); the self-join is one tile, so every p gives that answer
         for n_jobs in (2, 4, 100):
             mp = compute_mp(
                 self.SER, None, 4, MPOpts(algorithm="mpx", remap_neg_corr=True, n_jobs=n_jobs)
             )
             want = [1.0183, 1.0183, 0.8739, 0, 0, 1.2060, 0.8739, 0, 0]
             np.testing.assert_allclose(mp.mp, want, atol=1e-4)
+            np.testing.assert_array_equal(mp.idx, [6, 3, 4, 7, 8, 3, 2, 3, 4])
+
+
+def _brute_force(a, b, w, excl):
+    """z-normalised Euclidean distances between every window of a and
+    of b, computed window by window; |i - j| < excl is excluded."""
+    za = sliding_window_view(a, w)
+    zb = sliding_window_view(b, w)
+    za = (za - za.mean(1, keepdims=True)) / za.std(1, keepdims=True)
+    zb = (zb - zb.mean(1, keepdims=True)) / zb.std(1, keepdims=True)
+    corr = np.clip(za @ zb.T / w, -1.0, 1.0)
+    if excl:
+        i, j = np.indices(corr.shape)
+        corr[np.abs(i - j) < excl] = -np.inf
+    d = np.sqrt(2.0 * w * (1.0 - corr))
+    return d.min(1), d.min(0)
+
+
+def _tiled(a, b, w, t, self_join):
+    """Max-merge of mpx_tile_partial over t-wide tiles: the upper
+    triangle for a self-join, the full rectangle for an AB join."""
+    la, lb = a.size - w + 1, b.size - w + 1
+    row, col = np.full(la, -np.inf), np.full(lb, -np.inf)
+    for r0 in range(0, la, t):
+        for c0 in range(r0 if self_join else 0, lb, t):
+            mpr, _, mpc, _ = mpx_tile_partial(
+                a[r0 : r0 + t + w - 1], b[c0 : c0 + t + w - 1], r0, c0, t, t, w,
+                self_join=self_join,
+            )
+            np.maximum(row[r0 : r0 + mpr.size], mpr, out=row[r0 : r0 + mpr.size])
+            np.maximum(col[c0 : c0 + mpc.size], mpc, out=col[c0 : c0 + mpc.size])
+    if self_join:
+        row = np.maximum(row, col)
+    return p2e(row, w), p2e(col, w)
+
+
+@pytest.mark.parametrize("offset", [0.0, 1e6, 1e9])
+class TestMpxOffsetPrecision:
+    """MPX tiles and whole-series joins against brute force on
+    offset + N(0, 1): the diagonal seeds must not cancel at large offsets."""
+
+    W, T = 8, 64
+
+    def _series(self, offset, n, seed):
+        return offset + np.random.default_rng(seed).standard_normal(n)
+
+    def test_self_join(self, offset):
+        a = self._series(offset, 300, 1)
+        want, _ = _brute_force(a, a, self.W, max(1, self.W // 4))
+        tiled, _ = _tiled(a, a, self.W, self.T, self_join=True)
+        np.testing.assert_allclose(tiled, want, atol=1e-4)
+        whole = compute_mp(a, None, self.W, MPOpts(algorithm="mpx"))
+        np.testing.assert_allclose(whole.mp, want, atol=1e-4)
+
+    def test_ab_join(self, offset):
+        a = self._series(offset, 300, 2)
+        b = self._series(offset, 260, 3)
+        want_ab, want_ba = _brute_force(a, b, self.W, 0)
+        tiled_ab, tiled_ba = _tiled(a, b, self.W, self.T, self_join=False)
+        np.testing.assert_allclose(tiled_ab, want_ab, atol=1e-4)
+        np.testing.assert_allclose(tiled_ba, want_ba, atol=1e-4)
+        whole = compute_mp(a, b, self.W, MPOpts(algorithm="mpx"))
+        np.testing.assert_allclose(whole.mp, want_ab, atol=1e-4)
+        np.testing.assert_allclose(whole.mpb, want_ba, atol=1e-4)
 
 
 class TestStampSampling:
